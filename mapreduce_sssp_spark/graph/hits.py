@@ -41,12 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .sssp import RoundState, loop_partitions, static_rounds
 
 
 def hits(
@@ -63,13 +58,8 @@ def hits(
     float error.
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         e = (
             edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
@@ -99,24 +89,27 @@ def hits(
             "node", F.lit(1.0 / n_nodes).alias("hub")
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
-        # r12: RoundState — per-round lineage truncation (local) / the
-        # old persist+periodic-checkpoint (cluster); see sssp.py. Both
-        # per-round vectors (auths half-update, joined scores) get it:
-        # each is referenced twice downstream, the doubling class.
         rounds_state = RoundState(spark, checkpoint_every)
-        scores = None
-        prev_auths = None
-        for it in range(1, iterations + 1):
+        halves: list[DataFrame] = []  # last round's auths, released late
+
+        def hits_step(scores: DataFrame, *_) -> DataFrame:
+            hubs = scores.select("node", "hub")
             a_raw = (
                 fwd.join(hubs, fwd["src"] == hubs["node"])
                 .groupBy("dst")
                 .agg(F.sum("hub").alias("a_raw"))
             )
+            # The half-update is read twice below (hub pull, joined
+            # scores), the plan-doubling class: it gets its own cut and
+            # its own count, the round's first job.
             auths = rounds_state.init(
                 nodes.join(a_raw, nodes["node"] == a_raw["dst"], "left")
                 .select("node", F.coalesce("a_raw", F.lit(0.0)).alias("auth"))
             )
             auths.count()
+            if halves:
+                rounds_state.release(halves.pop())
+            halves.append(auths)
             h_raw = (
                 rev.join(
                     auths.withColumnRenamed("node", "anode"),
@@ -125,20 +118,14 @@ def hits(
                 .groupBy("src")
                 .agg(F.sum("auth").alias("h_raw"))
             )
-            joined = (
+            return (
                 nodes.join(h_raw, nodes["node"] == h_raw["src"], "left")
                 .select("node", F.coalesce("h_raw", F.lit(0.0)).alias("hub"))
                 .join(auths, "node")
                 .select("node", "hub", "auth")
             )
-            joined = rounds_state.advance(joined, it)
-            joined.count()
-            rounds_state.release(hubs)
-            rounds_state.release(prev_auths)
-            rounds_state.release(scores)
-            scores = joined
-            prev_auths = auths
-            hubs = scores.select("node", "hub")
+
+        scores = rounds_state.run("hits", hubs, hits_step, iterations)
 
         # One global normalization, after the loop: two broadcast 1-row
         # totals over the cached final vectors.
@@ -159,8 +146,6 @@ def hits(
     fwd.unpersist()
     rev.unpersist()
     nodes.unpersist()
-    if prev_auths is not None:
-        prev_auths.unpersist()
-    if scores is not None:
-        scores.unpersist()
+    for df in halves + [scores]:
+        df.unpersist()
     return out

@@ -17,15 +17,13 @@ Formulation notes — two designs were measured, one blows up:
   STATIC (partitioned once, persisted) and iterates only a
   (node, deg, alive) state: doomed nodes send -1 messages along their
   edges, survivors subtract. The state is referenced twice per round
-  (sssp's shape), and reliable checkpoints every ``checkpoint_every``
-  rounds truncate the lineage — the same discipline as
-  sssp.py:114-196, self-sufficient on any session.
+  (sssp's shape) and runs on sssp's driver, ``RoundState.run``.
 
-Round shape: doomed count (the one action — convergence test AND
-materialization), doomed->neighbor decrement messages (join against the
-static edges + partial-agg), state update (left join). Message volume
-is proportional to the degrees of *removed* nodes only — the delta —
-not to the live edge count.
+Round shape: doomed->neighbor decrement messages (join against the
+static edges + partial-agg), state update (left join), then the count
+of the new state's doomed nodes (the one action — convergence test AND
+materialization). Message volume is proportional to the degrees of
+*removed* nodes only — the delta — not to the live edge count.
 
 At 100 TB: the static edge list is hash-partitioned on src once and
 never re-shuffled; each round shuffles only the decrement messages
@@ -43,18 +41,11 @@ graphs.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .sssp import RoundState, loop_partitions, static_rounds
 
 
 def kcore(
@@ -68,17 +59,9 @@ def kcore(
     (u < v) distinct edges; returns (node, core_deg) where core_deg is
     the node's degree inside the k-core (>= k by definition)."""
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    n_doomed = -1
-    # Clamp opens before the caches are registered: cached plans compile
-    # their exchanges with the conf at persist() time and AQE cannot
-    # coalesce them (full note in sssp.py).
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
+    doomed_now = F.col("alive") & (F.col("deg") < k)
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         # Both directions so every edge is visible from each endpoint;
         # partitioned once on u (the message-join key), never
@@ -89,8 +72,6 @@ def kcore(
             .repartition(n_part, "u")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # r12: RoundState — per-round lineage truncation (local) / the
-        # old persist+periodic-checkpoint (cluster); see sssp.py.
         rounds_state = RoundState(spark, checkpoint_every)
         state = rounds_state.init(
             und.groupBy("u")
@@ -98,49 +79,23 @@ def kcore(
             .select(F.col("u").alias("node"), "deg", F.lit(True).alias("alive"))
         )
 
-        prev_state = None  # parent cache pending unpersist (mis.py's device)
-        for rnd in range(1, max_rounds + 1):
-            doomed = state.filter(F.col("alive") & (F.col("deg") < k)).select(
-                "node"
-            )
-            # The one action per round: materializes state AND tests the
-            # fixed point. Only after it fills this round's cache can
-            # the parent drop — unpersisting earlier forces the fill to
-            # replay lineage back to the last checkpoint (the deferred-
-            # unpersist lesson from mis.py, measured ~2x on its loop).
-            n_doomed = doomed.count()
-            if prev_state is not None:
-                rounds_state.release(prev_state)
-                prev_state = None
-            if n_doomed == 0:
-                break
+        def peel(state: DataFrame, *_) -> DataFrame:
+            doomed = state.filter(doomed_now).select(F.col("node").alias("u"))
             msgs = (
-                und.join(F.broadcast(doomed.withColumnRenamed("node", "u")), "u")
+                und.join(F.broadcast(doomed), "u")
                 .groupBy("v")
                 .agg(F.count("*").alias("dec"))
                 .select(F.col("v").alias("node"), "dec")
             )
-            new_state = state.join(msgs, "node", "left").select(
+            return state.join(msgs, "node", "left").select(
                 "node",
                 (F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"),
                 # alive judged on the OLD degree: this round's doomed die,
                 # survivors carry the decremented degree into next round.
                 (F.col("alive") & (F.col("deg") >= k)).alias("alive"),
             )
-            new_state = rounds_state.advance(new_state, rnd)
-            if rnd % checkpoint_every == 0 and not rounds_state.local:
-                # eager checkpoint already materialized: parent drops now
-                rounds_state.release(state)
-            else:
-                prev_state = state  # drop only after the child's fill
-            state = new_state
-        else:
-            warnings.warn(
-                f"kcore: max_rounds={max_rounds} exhausted with {n_doomed} nodes "
-                "still peeling; returned core may contain sub-k nodes",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+
+        state = rounds_state.run("kcore", state, peel, max_rounds, doomed_now)
     out = state.filter("alive").select("node", F.col("deg").alias("core_deg"))
     und.unpersist()
     return out

@@ -37,18 +37,10 @@ pure-Python synchronous peel.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .sssp import RoundState, loop_partitions, static_rounds
 
 
 def ktruss(
@@ -62,76 +54,39 @@ def ktruss(
     distinct edges. Returns (u, v, support): the surviving edges with
     their within-truss common-neighbor counts (all >= k-2)."""
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    n_doomed = -1
-    sup = None
-    # r12: RoundState — per-round lineage truncation (local) / the old
-    # persist+periodic-checkpoint (cluster); see sssp.py. Both per-round
-    # tables get it: cur is referenced three times per round (und's two
-    # branches + the support join), sup twice (count + survivor filter).
     rounds_state = RoundState(spark, checkpoint_every)
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
+
+    def recount(sup: DataFrame, *_) -> DataFrame:
+        cur = sup.filter(F.col("support") >= k - 2).select("u", "v")
+        und = cur.union(
+            cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).repartition(n_part, "u")
+        adj = und.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
+        return (
+            cur.join(
+                adj.select(F.col("u").alias("ua"), F.col("nbrs").alias("nbrs_a")),
+                F.col("u") == F.col("ua"),
+            )
+            .join(
+                adj.select(F.col("u").alias("ub"), F.col("nbrs").alias("nbrs_b")),
+                F.col("v") == F.col("ub"),
+            )
+            .select(
+                "u",
+                "v",
+                F.size(F.array_intersect("nbrs_a", "nbrs_b")).alias("support"),
+            )
+        )
+
     with static_rounds(spark, parts=n_part, no_broadcast=True):
-        cur = edges.select("u", "v").persist(StorageLevel.MEMORY_AND_DISK)
-        pending = []  # parent caches pending unpersist (mis.py's device)
-        for rnd in range(1, max_rounds + 1):
-            und = cur.union(
-                cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            ).repartition(n_part, "u")
-            adj = und.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
-            sup = (
-                cur.join(
-                    adj.select(
-                        F.col("u").alias("ua"), F.col("nbrs").alias("nbrs_a")
-                    ),
-                    F.col("u") == F.col("ua"),
-                )
-                .join(
-                    adj.select(
-                        F.col("u").alias("ub"), F.col("nbrs").alias("nbrs_b")
-                    ),
-                    F.col("v") == F.col("ub"),
-                )
-                .select(
-                    "u",
-                    "v",
-                    F.size(F.array_intersect("nbrs_a", "nbrs_b")).alias(
-                        "support"
-                    ),
-                )
-            )
-            sup = rounds_state.init(sup)
-            # The one action per round: convergence test + barrier —
-            # it fills THIS round's sup cache, so only now can the
-            # previous round's caches drop (unpersisting them earlier
-            # forces the fill to replay lineage back to the last
-            # checkpoint — the deferred-unpersist lesson from mis.py).
-            n_doomed = sup.filter(F.col("support") < k - 2).count()
-            for df in pending:
-                rounds_state.release(df)
-            pending = []
-            if n_doomed == 0:
-                rounds_state.release(cur)
-                break
-            new_cur = sup.filter(F.col("support") >= k - 2).select("u", "v")
-            new_cur = rounds_state.advance(new_cur, rnd)
-            if rnd % checkpoint_every == 0 and not rounds_state.local:
-                # eager checkpoint: child durable, parents can drop now
-                rounds_state.release(cur)
-                rounds_state.release(sup)
-            else:
-                pending = [cur, sup]
-            cur = new_cur
-        else:
-            warnings.warn(
-                f"ktruss: max_rounds={max_rounds} exhausted with {n_doomed} "
-                "edges still peeling; result may contain sub-truss edges",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        # The state is the round's support table; its survivors are the
+        # next round's edge set. Every input edge survives "round 0".
+        sup = rounds_state.init(
+            edges.select("u", "v", F.lit(k - 2).alias("support"))
+        )
+        sup = rounds_state.run(
+            "ktruss", sup, recount, max_rounds, F.col("support") < k - 2
+        )
     return sup.filter(F.col("support") >= k - 2)

@@ -33,12 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .sssp import RoundState, loop_partitions, static_rounds
 
 
 def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
@@ -50,7 +45,6 @@ def label_propagation(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
     always non-empty. Returns (node BIGINT, community BIGINT).
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
     # Prelude caches register under a core-count clamp, the loop under

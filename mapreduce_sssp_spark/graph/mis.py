@@ -46,18 +46,11 @@ maximality + greedy equivalence against pure Python on random graphs.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .sssp import RoundState, loop_partitions, static_rounds
 
 #: Knuth multiplicative-hash constants, shared verbatim by the DuckDB
 #: twin (both engines evaluate the identical exact-integer expression).
@@ -165,14 +158,9 @@ def mis_greedy(
     covered).
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    n_undec = -1
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
+    undecided_now = F.col("in_mis").isNull()
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         # Both directions so each endpoint sees the edge; partitioned
         # once on u (the message-send key), never re-shuffled.
@@ -182,8 +170,6 @@ def mis_greedy(
             .repartition(n_part, "u")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # r12: RoundState — per-round lineage truncation (local) / the
-        # old persist+periodic-checkpoint (cluster); see sssp.py.
         rounds_state = RoundState(spark, checkpoint_every)
         state = rounds_state.init(
             und.select(F.col("u").alias("node"))
@@ -196,65 +182,26 @@ def mis_greedy(
             )
         )
 
-        prev_state = None  # parent cache pending unpersist (see below)
-        for rnd in range(1, max_rounds + 1):
-            undecided = state.filter(F.col("in_mis").isNull()).select(
-                "node", "pri"
-            )
-            # The one action per round: materializes state AND tests
-            # the fixed point.
-            n_undec = undecided.count()
-            # Only NOW is this round's state cache actually filled —
-            # unpersisting the parent before this point would force the
-            # fill to recompute the whole lineage back to the last
-            # checkpoint (measured: the deferred unpersist cut the
-            # sf0.1 loop ~2x; the eager variant re-ran up to
-            # checkpoint_every rounds of joins inside every count).
-            if prev_state is not None:
-                rounds_state.release(prev_state)
-                prev_state = None
-            if n_undec == 0:
-                break
+        def luby(state: DataFrame, rnd: int, n_undec: int) -> DataFrame:
+            # n_undec is the driver's count of state's undecided nodes;
+            # round 1's state has not been counted yet.
+            undecided = state.filter(undecided_now).select("node", "pri")
+            if n_undec < 0:
+                n_undec = undecided.count()
             if 0 < n_undec <= tail_nodes:
-                u_set = undecided.select(F.col("node").alias("u"))
-                v_set = undecided.select(F.col("node").alias("v"))
-                sub = und.join(F.broadcast(u_set), "u", "left_semi").join(
-                    F.broadcast(v_set), "v", "left_semi"
-                )
-                rows = sub.limit(tail_edges + 1).toPandas()
-                if len(rows) <= tail_edges:
-                    pu = undecided.toPandas()
-                    decided = _tail_rounds(
-                        pu["node"].to_numpy(),
-                        pu["pri"].to_numpy(),
-                        rows["u"].to_numpy(),
-                        rows["v"].to_numpy(),
-                        rnd,
-                    )
-                    dec_df = spark.createDataFrame(
-                        decided, "node long, new_mis boolean, tail_round int"
-                    )
-                    state = state.join(dec_df, "node", "left").select(
-                        "node",
-                        "pri",
-                        F.coalesce("in_mis", "new_mis").alias("in_mis"),
-                        F.coalesce("decided_round", "tail_round").alias(
-                            "decided_round"
-                        ),
-                    )
-                    break
-                # induced subgraph too dense for the driver: stay
-                # distributed this round, re-test next round.
+                finished = _tail_finish(state, undecided, und, rnd, tail_edges)
+                if finished is not None:
+                    return finished
             # Messages: every edge whose SOURCE is undecided carries
             # that source's priority to its neighbor; min-combine per
             # receiver. (Decided receivers get messages too — harmless,
             # the winner join below only consults undecided nodes.)
             # The undecided set shrinks geometrically, and n_undec is
-            # already in hand from the convergence action — once it
-            # fits a broadcast, hint it so the edge side of this join
-            # never moves (map-side probe of the persisted partitioning
-            # instead of a shuffle; AQE is off inside the loop by
-            # design, so the static planner needs the hint).
+            # already in hand — once it fits a broadcast, hint it so the
+            # edge side of this join never moves (map-side probe of the
+            # persisted partitioning instead of a shuffle; AQE is off
+            # inside the loop by design, so the static planner needs the
+            # hint).
             undec_u = undecided.select(
                 F.col("node").alias("u"), F.col("pri").alias("nbr_pri")
             )
@@ -268,10 +215,7 @@ def mis_greedy(
             )
             winners = (
                 undecided.join(msgs, "node", "left")
-                .filter(
-                    F.col("pri")
-                    < F.coalesce("min_nbr", F.lit(_PRI_INF))
-                )
+                .filter(F.col("pri") < F.coalesce("min_nbr", F.lit(_PRI_INF)))
                 .select("node")
             )
             # Neighbors of winners — WITHOUT filtering to undecided:
@@ -293,7 +237,7 @@ def mis_greedy(
             decisions = winners.select(
                 "node", F.lit(True).alias("new_mis")
             ).unionByName(losers.select("node", F.lit(False).alias("new_mis")))
-            new_state = state.join(decisions, "node", "left").select(
+            return state.join(decisions, "node", "left").select(
                 "node",
                 "pri",
                 F.coalesce("in_mis", "new_mis").alias("in_mis"),
@@ -302,22 +246,48 @@ def mis_greedy(
                     F.when(F.col("new_mis").isNotNull(), F.lit(rnd)),
                 ).alias("decided_round"),
             )
-            new_state = rounds_state.advance(new_state, rnd)
-            if rnd % checkpoint_every == 0 and not rounds_state.local:
-                # checkpoint() is eager: the child is durable before the
-                # parent cache drops, so the immediate release is safe.
-                rounds_state.release(state)
-            else:
-                prev_state = state  # drop only after the child's fill
-            state = new_state
-        else:
-            warnings.warn(
-                f"mis_greedy: max_rounds={max_rounds} exhausted with "
-                f"{n_undec} nodes undecided; result is an independent set "
-                "but may not be maximal",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+
+        state = rounds_state.run(
+            "mis_greedy", state, luby, max_rounds, undecided_now
+        )
     out = state.select("node", "in_mis", "decided_round")
     und.unpersist()
     return out
+
+
+def _tail_finish(
+    state: DataFrame,
+    undecided: DataFrame,
+    und: DataFrame,
+    rnd: int,
+    tail_edges: int,
+) -> DataFrame | None:
+    """``state`` with every undecided node decided in-process from round
+    ``rnd`` on, or None when the undecided induced subgraph is too dense
+    for the driver (then the loop stays distributed this round and
+    re-tests next round)."""
+    u_set = undecided.select(F.col("node").alias("u"))
+    v_set = undecided.select(F.col("node").alias("v"))
+    sub = und.join(F.broadcast(u_set), "u", "left_semi").join(
+        F.broadcast(v_set), "v", "left_semi"
+    )
+    rows = sub.limit(tail_edges + 1).toPandas()
+    if len(rows) > tail_edges:
+        return None
+    pu = undecided.toPandas()
+    decided = _tail_rounds(
+        pu["node"].to_numpy(),
+        pu["pri"].to_numpy(),
+        rows["u"].to_numpy(),
+        rows["v"].to_numpy(),
+        rnd,
+    )
+    dec_df = state.sparkSession.createDataFrame(
+        decided, "node long, new_mis boolean, tail_round int"
+    )
+    return state.join(dec_df, "node", "left").select(
+        "node",
+        "pri",
+        F.coalesce("in_mis", "new_mis").alias("in_mis"),
+        F.coalesce("decided_round", "tail_round").alias("decided_round"),
+    )

@@ -31,12 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .sssp import RoundState, loop_partitions, static_rounds
 
 
 def pagerank(
@@ -61,16 +56,8 @@ def pagerank(
     whole definition of PPR.
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
-    # Clamp opens before the caches are registered: cached plans compile
-    # their exchanges with the conf at persist() time and AQE cannot
-    # coalesce them (full note in sssp.py).
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         e = (
             edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
@@ -121,7 +108,7 @@ def pagerank(
             StorageLevel.MEMORY_AND_DISK
         )
 
-        for it in range(1, iterations + 1):
+        def power_step(ranks: DataFrame, *_) -> DataFrame:
             # Dangling mass (rank on nodes with no out-edges) as a 1-row
             # DataFrame broadcast into the update — the round's single
             # count() action then materializes the whole chain, where the
@@ -140,7 +127,7 @@ def pagerank(
                 .groupBy("node")
                 .agg(F.sum("c").alias("contrib"))
             )
-            new_ranks = (
+            return (
                 nodes.join(contribs, "node", "left")
                 .crossJoin(dangling_df)
                 .select(
@@ -152,12 +139,8 @@ def pagerank(
                     ).alias("rank"),
                 )
             )
-            # r12: RoundState — per-round lineage truncation (local) /
-            # the old persist+periodic-checkpoint (cluster); see sssp.py.
-            new_ranks = rounds_state.advance(new_ranks, it)
-            new_ranks.count()
-            rounds_state.release(ranks)
-            ranks = new_ranks
+
+        ranks = rounds_state.run("pagerank", ranks, power_step, iterations)
 
     links.unpersist()
     nodes.unpersist()

@@ -43,19 +43,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .sssp import RoundState, loop_partitions, static_rounds
 
 
 def scc(edges: DataFrame, *, max_outer: int = 50) -> DataFrame:
     """(node BIGINT, scc BIGINT): scc = min node id of the node's
     strongly connected component (singletons label themselves)."""
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
     # r12: RoundState.truncate — the lineage cuts below were eager

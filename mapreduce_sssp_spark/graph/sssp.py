@@ -19,6 +19,11 @@ job) as one driver-side loop over DataFrames:
   in-memory persistence with periodic reliable checkpoints to truncate
   lineage (without which the plan grows exponentially with rounds).
 
+The round mechanics (advance -> one count -> release -> stop at zero,
+the ``max_rounds`` warning) are ``RoundState.run``, the one driver that
+every materialized fixpoint loop in ``graph/`` runs on; this module's
+``sssp`` supplies only the relax step.
+
 Scale notes (100 TB / 1000 executors):
 
 * ``edges`` is hash-partitioned by ``src`` once, sorted within
@@ -64,9 +69,10 @@ from __future__ import annotations
 import os
 import tempfile
 import warnings
+from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -161,6 +167,7 @@ class RoundState:
         checkpoint on a cluster."""
         if self.local:
             return df.localCheckpoint(eager=True)
+        _ensure_checkpoint_dir(df.sparkSession)
         return df.checkpoint()
 
     def advance(self, df: DataFrame, rnd: int) -> DataFrame:
@@ -176,6 +183,7 @@ class RoundState:
             # Dataset.checkpoint preserves outputPartitioning and
             # outputOrdering into the LogicalRDD, so a loop's layout
             # invariants survive truncation.
+            _ensure_checkpoint_dir(df.sparkSession)
             out = cached.checkpoint()
             cached.unpersist()
             return out
@@ -190,6 +198,62 @@ class RoundState:
         if old is not None:
             old.unpersist()
 
+    def run(
+        self,
+        loop: str,
+        state: DataFrame,
+        step: Callable[[DataFrame, int, int], DataFrame],
+        max_rounds: int,
+        pending: str | Column | None = None,
+    ) -> DataFrame:
+        """Drive a fixpoint loop from ``state`` and return its last state —
+        the reference's relax-job chain (SingleSourceSP.java:439-519),
+        written once for every materialized loop.
+
+        Round ``rnd`` (1-based) calls ``step(state, rnd, last)`` for the
+        next state, where ``last`` is the previous round's count (-1
+        before the first count), registers it with advance(), runs ONE
+        count, releases the parent and stops once the count is zero. The
+        count is of the new state's ``pending`` rows (a semi-naive loop's
+        frontier or undecided set, the reference's Y flag and Hadoop
+        counter, SingleSourceSP.java:273-281) or, with ``pending=None``,
+        of the whole state: a fixed-iteration loop, whose normal end is
+        running out of rounds. A pending loop that runs out of
+        ``max_rounds`` warns once, naming ``loop``; its last state is
+        returned as is.
+
+        * One count per round is deliberate: it both decides convergence
+          AND materializes the round, so a round is one job. Letting
+          rounds chain lazily (checking every K rounds) was measured to
+          save nothing at K=2 and to blow up driver memory at K=3 —
+          broadcast planning over the unmaterialized multi-round lineage
+          loses its size bounds.
+        * The parent is released only after the child's count, in every
+          deployment: until that count fills the child, the child's plan
+          still reads the parent, and dropping the parent first makes the
+          fill replay lineage back to the last checkpoint (measured ~2x
+          on the sf0.1 mis loop, which re-ran up to ``checkpoint_every``
+          rounds of joins inside every count).
+        * Exactly one advance() and one release() per round: traced runs
+          count rounds as an advance followed by a release.
+        """
+        count = -1
+        for rnd in range(1, max_rounds + 1):
+            new = self.advance(step(state, rnd, count), rnd)
+            count = (new if pending is None else new.filter(pending)).count()
+            self.release(state)
+            state = new
+            if count == 0:
+                return state
+        if pending is not None:
+            warnings.warn(
+                f"{loop}: max_rounds={max_rounds} exhausted with {count} "
+                "rows still pending; the result may not be converged",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        return state
+
 
 def memo_checkpoint(df: DataFrame) -> DataFrame:
     """Eager lineage cut for the cross-query convergence memos
@@ -203,6 +267,7 @@ def memo_checkpoint(df: DataFrame) -> DataFrame:
     survive executor loss there)."""
     if df.sparkSession.sparkContext.master.startswith("local"):
         return df.localCheckpoint(eager=True)
+    _ensure_checkpoint_dir(df.sparkSession)
     return df.checkpoint()
 
 
@@ -241,7 +306,13 @@ def static_rounds(
     sort-merge join with a per-round driver-blocking broadcast-collect
     job (and at cluster scale would try to collect a frontier).
     Explicit ``F.broadcast(...)`` hints are unaffected by the
-    threshold, so loops that deliberately broadcast keep working.
+    threshold, so loops that deliberately broadcast keep working. Each
+    loop that sets it was A/B'd (r13, min-of-3 alternating at sf0.1).
+
+    Open the scope BEFORE the loop's caches are registered: cached
+    plans compile their exchanges with the conf in force at persist()
+    time and are exempt from AQE coalescing, so caches registered
+    outside it materialize through the session's stock partition count.
 
     The conf flips are session-visible for the loop's duration; queries
     are executed sequentially by every harness this engine targets.
@@ -277,11 +348,13 @@ def static_rounds(
 def _ensure_checkpoint_dir(spark: SparkSession) -> None:
     """Make reliable checkpoints work on ANY session, not just ours.
 
-    The driver harness calls queries() with its own SparkSession, which has
-    no checkpoint dir configured. On a cluster, point SPARK_GRAFT_CKPT_DIR
-    at shared storage (HDFS/S3) — executors must be able to write it; the
-    tempdir fallback is correct only in local mode, where driver and
-    executors share a filesystem.
+    Called by the three places that take a reliable checkpoint
+    (RoundState.truncate, RoundState.advance and memo_checkpoint, cluster
+    branches only): a harness may call queries() with its own
+    SparkSession, which has no checkpoint dir configured. On a cluster,
+    point SPARK_GRAFT_CKPT_DIR at shared storage (HDFS/S3) — executors
+    must be able to write it; the tempdir fallback is correct only in
+    local mode, where driver and executors share a filesystem.
     """
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:
@@ -315,7 +388,6 @@ def sssp(
     with out-edges plus every reachable node (FIXTURES.md B3).
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
     e = edges.select(
@@ -328,12 +400,6 @@ def sssp(
         if neg:
             raise ValueError("sssp requires non-negative edge weights")
 
-    changed = -1  # defined even if max_rounds < 1 skips the loop body
-    # The clamp opens BEFORE the edge/state caches are registered:
-    # cached plans compile their exchanges with the conf in force at
-    # persist() time and are exempt from AQE coalescing, so on a stock
-    # 200-partition session the pre-loop caches would otherwise
-    # materialize through 200-task stages in round 1.
     rounds_state = RoundState(spark, checkpoint_every)
     with static_rounds(spark, parts=n_part, no_broadcast=True):
         # Min-combine parallel edges, then fix the partitioning on src
@@ -390,7 +456,7 @@ def sssp(
             )
         )
 
-        for rnd in range(1, max_rounds + 1):
+        def relax(state: DataFrame, *_) -> DataFrame:
             # Frontier: only nodes whose distance changed last round emit
             # relaxations (SingleSourceSP.java:179).
             frontier = state.filter(
@@ -410,7 +476,7 @@ def sssp(
             # state side's partitioning + sort order survive the round
             # (see module docstring; broadcasts are off in-loop so the
             # message side is never broadcast-collected per round).
-            new_state = state.join(cand, "node", "left").select(
+            return state.join(cand, "node", "left").select(
                 "node",
                 "has_out",
                 F.least("dist", "cand").alias("dist"),
@@ -420,26 +486,8 @@ def sssp(
                     "updated"
                 ),
             )
-            new_state = rounds_state.advance(new_state, rnd)
 
-            # One count() per round is deliberate: it both decides
-            # convergence AND materializes the round. Letting rounds chain
-            # lazily (checking every K rounds) was measured to save nothing
-            # at K=2 and to blow up driver memory at K=3 — broadcast
-            # planning over the unmaterialized multi-round lineage loses
-            # its size bounds.
-            changed = new_state.filter("updated").count()
-            rounds_state.release(state)
-            state = new_state
-            if changed == 0:
-                break
-        else:
-            warnings.warn(
-                f"sssp: max_rounds={max_rounds} exhausted with {changed} nodes "
-                "still updating; returned distances may not be converged",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        state = rounds_state.run("sssp", state, relax, max_rounds, "updated")
     # The per-round count() actions materialized the final state in cache
     # (or checkpoint); the edge cache is no longer needed.
     e.unpersist()

@@ -21,18 +21,11 @@ O(log diameter) rounds.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .sssp import (
-    RoundState,
-    _ensure_checkpoint_dir,
-    loop_partitions,
-    static_rounds,
-)
+from .sssp import RoundState, loop_partitions, static_rounds
 
 
 def wcc(
@@ -45,13 +38,11 @@ def wcc(
     treating edges as undirected. Isolated src/dst nodes keep themselves.
     """
     spark = edges.sparkSession
-    _ensure_checkpoint_dir(spark)
     n_part = loop_partitions(spark, edges)
 
     fwd = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     )
-    changed = -1  # defined even if max_rounds < 1 skips the loop body
     # The pre-loop caches register under a CORE-COUNT clamp, the loop
     # under the data-sized n_part. Two scopes on purpose: cached plans
     # compile their exchanges with the conf at persist() time and AQE
@@ -92,61 +83,44 @@ def wcc(
         # compiled into the cached plan at persist() time; round 1's
         # count materializes both caches in one job.
 
-    # r13 A/B (min-of-3 alternating, sf0.1): broadcasts off in-loop
-    # like sssp — Catalyst's size estimate was replacing in-job
-    # co-partitioned joins with per-round driver-blocking broadcast
-    # builds. Explicit F.broadcast hints are unaffected.
-    with static_rounds(spark, parts=n_part, no_broadcast=True):
-        for rnd in range(1, max_rounds + 1):
-            frontier = state.filter("updated").select(
-                F.col("node").alias("f_node"), F.col("component").alias("f_comp")
+    def propagate(state: DataFrame, *_) -> DataFrame:
+        frontier = state.filter("updated").select(
+            F.col("node").alias("f_node"), F.col("component").alias("f_comp")
+        )
+        msgs = frontier.join(und, frontier["f_node"] == und["src"]).select(
+            F.col("dst").alias("node"), F.col("f_comp").alias("cand")
+        )
+        cand = msgs.groupBy("node").agg(F.min("cand").alias("cand"))
+        propagated = state.join(cand, "node", "left").select(
+            "node",
+            F.least("component", "cand").alias("component"),
+            F.col("component").alias("old_comp"),
+        )
+        # Pointer jumping: label <- label[label]. The join key is the
+        # label value — skewed by construction (every member of a big
+        # component carries the same label; salt this key on a known
+        # power-law graph — see static_rounds on why not AQE here);
+        # labels are node ids so the lookup side is state itself.
+        labels = state.select(
+            F.col("node").alias("l_node"), F.col("component").alias("l_comp")
+        )
+        return (
+            propagated.join(
+                labels, propagated["component"] == labels["l_node"], "left"
             )
-            msgs = frontier.join(und, frontier["f_node"] == und["src"]).select(
-                F.col("dst").alias("node"), F.col("f_comp").alias("cand")
-            )
-            cand = msgs.groupBy("node").agg(F.min("cand").alias("cand"))
-            propagated = state.join(cand, "node", "left").select(
+            .select(
                 "node",
-                F.least("component", "cand").alias("component"),
-                F.col("component").alias("old_comp"),
+                F.least("component", "l_comp").alias("new_comp"),
+                "old_comp",
             )
-            # Pointer jumping: label <- label[label]. The join key is the
-            # label value — skewed by construction (every member of a big
-            # component carries the same label; salt this key on a known
-            # power-law graph — see static_rounds on why not AQE here);
-            # labels are node ids so the lookup side is state itself.
-            labels = state.select(
-                F.col("node").alias("l_node"), F.col("component").alias("l_comp")
+            .select(
+                "node",
+                F.col("new_comp").alias("component"),
+                (F.col("new_comp") < F.col("old_comp")).alias("updated"),
             )
-            new_state = (
-                propagated.join(
-                    labels, propagated["component"] == labels["l_node"], "left"
-                )
-                .select(
-                    "node",
-                    F.least("component", "l_comp").alias("new_comp"),
-                    "old_comp",
-                )
-                .select(
-                    "node",
-                    F.col("new_comp").alias("component"),
-                    (F.col("new_comp") < F.col("old_comp")).alias("updated"),
-                )
-            )
-            # r12: RoundState — per-round lineage truncation (local) /
-            # the old persist+periodic-checkpoint (cluster); see sssp.py.
-            new_state = rounds_state.advance(new_state, rnd)
-            changed = new_state.filter("updated").count()
-            rounds_state.release(state)
-            state = new_state
-            if changed == 0:
-                break
-        else:
-            warnings.warn(
-                f"wcc: max_rounds={max_rounds} exhausted with {changed} labels "
-                "still moving",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        )
+
+    with static_rounds(spark, parts=n_part, no_broadcast=True):
+        state = rounds_state.run("wcc", state, propagate, max_rounds, "updated")
     und.unpersist()
     return state.select("node", "component")

@@ -55,7 +55,9 @@ EDGE_SCHEMA = T.StructType(
 # (application, sf_dir, table, file mtime): NO data or results are
 # cached — a DataFrame is an unexecuted scan plan, and every action
 # still reads the parquet files (the mtime in the key drops the entry
-# if the file is replaced in-place, e.g. by test fixtures). This is
+# if the file is replaced in-place, e.g. by test fixtures). A path that
+# cannot be stat'ed (remote, or missing) has no mtime to invalidate an
+# entry by, so it is read fresh and never memoized. This is
 # the same reuse register_tables' temp views already provide to the
 # SQL surface, extended to the DataFrame callers. RunCache (not a dict,
 # not None-then-rebound): the fingerprint folder skips non-whitelisted
@@ -69,16 +71,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     try:
         mtime = os.stat(f"{sf_dir}/{name}.parquet").st_mtime_ns
     except OSError:
-        mtime = None  # non-local path (or missing: read fails as before)
+        mtime = None
     key = (spark.sparkContext.applicationId, sf_dir, name, mtime)
-    memo = _SCAN_MEMO
-    df = memo.get(key)
+    df = _SCAN_MEMO.get(key)
     if df is None:
         if name == "events":
             df = load_events(spark, sf_dir)
         else:
             df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        memo.put(key, df)
+        if mtime is not None:
+            _SCAN_MEMO.put(key, df)
     return df
 
 

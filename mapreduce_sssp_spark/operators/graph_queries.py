@@ -1427,9 +1427,6 @@ def _part_cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     df = _COOC_EDGES_MEMO.get(key)
     if df is None:
-        from ..graph.sssp import _ensure_checkpoint_dir
-
-        _ensure_checkpoint_dir(spark)
         df = memo_checkpoint(_part_cooccurrence_edges_plan(spark, sf_dir))
         _COOC_EDGES_MEMO.put(key, df)
     return df

@@ -1522,9 +1522,8 @@ def _bpe_state(
     key = (spark.sparkContext.applicationId, sf_dir, n_merges)
     st = _BPE_STATE_MEMO.get(key)
     if st is None:
-        from ..graph.sssp import _ensure_checkpoint_dir, memo_checkpoint
+        from ..graph.sssp import memo_checkpoint
 
-        _ensure_checkpoint_dir(spark)
         docs = load_parallel(spark, sf_dir, "documents")
         merges, words = _learn_bpe(docs, n_merges)
         ck = memo_checkpoint(words)  # eager: materialized before unpersist

@@ -36,19 +36,28 @@ class RunCache:
     dict constant would fold its CONTENTS into the semantic
     fingerprints once populated — same referee flake as the counters,
     found on the DAG-state memo. Deliberately NOT a dict subclass
-    (isinstance(dict) would put it back on the folder's whitelist)."""
+    (isinstance(dict) would put it back on the folder's whitelist).
+
+    Holds at most ``cap`` entries: a put into a full memo evicts the
+    oldest insertion (dicts keep insertion order), so a long-lived
+    process keeps its recent entries instead of losing them all."""
 
     def __init__(self, cap: int = 8) -> None:
+        self._lock = threading.Lock()
         self._d: dict = {}
         self._cap = cap
 
     def get(self, key):
-        return self._d.get(key)
+        with self._lock:
+            return self._d.get(key)
 
     def put(self, key, value) -> None:
-        if len(self._d) > self._cap:  # bound growth across sessions
-            self._d.clear()
-        self._d[key] = value
+        with self._lock:
+            self._d.pop(key, None)
+            while self._d and len(self._d) >= self._cap:
+                del self._d[next(iter(self._d))]
+            self._d[key] = value
 
     def clear(self) -> None:
-        self._d.clear()
+        with self._lock:
+            self._d.clear()

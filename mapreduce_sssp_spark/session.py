@@ -53,12 +53,14 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Reliable checkpoints truncate lineage in the SSSP fixpoint loop
+    # Reliable checkpoints truncate lineage in the fixpoint loops
     # (SURVEY.md §4: the one genuinely manual physical concern). On a real
     # cluster SPARK_GRAFT_CKPT_DIR must point at shared storage (HDFS/S3);
-    # the local tempdir fallback is valid only in local mode. Queries also
-    # self-provision via graph.sssp._ensure_checkpoint_dir, so the engine
-    # works on sessions it did not create.
+    # the local tempdir fallback is valid only in local mode. The
+    # reliable-checkpoint branches of graph.sssp (RoundState.truncate,
+    # RoundState.advance, memo_checkpoint) also self-provision via
+    # _ensure_checkpoint_dir, so the engine works on sessions it did not
+    # create.
     if not spark.sparkContext.getCheckpointDir():
         spark.sparkContext.setCheckpointDir(
             os.environ.get("SPARK_GRAFT_CKPT_DIR")

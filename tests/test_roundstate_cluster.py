@@ -9,12 +9,22 @@ from __future__ import annotations
 from mapreduce_sssp_spark.graph.sssp import RoundState, memo_checkpoint
 
 
+class FakeContext:
+    def __init__(self, master: str):
+        self.master = master
+        self.checkpoint_dir: str | None = None
+
+    def getCheckpointDir(self):
+        return self.checkpoint_dir
+
+    def setCheckpointDir(self, path: str):
+        self.checkpoint_dir = path
+
+
 class FakeDF:
     def __init__(self, master: str):
         self.calls: list[str] = []
-        self.sparkSession = type(
-            "S", (), {"sparkContext": type("C", (), {"master": master})()}
-        )()
+        self.sparkSession = type("S", (), {"sparkContext": FakeContext(master)})()
 
     def persist(self, *_a):
         self.calls.append("persist")
@@ -77,3 +87,28 @@ def test_memo_checkpoint_branches_on_master():
     cluster = FakeDF("k8s://https://api:6443")
     memo_checkpoint(cluster)
     assert cluster.calls == ["checkpoint"]
+
+
+def test_cluster_branches_provision_a_checkpoint_dir(monkeypatch):
+    """Every reliable checkpoint works on a session without a checkpoint
+    dir: the cluster branches set one before checkpointing; the local
+    branches never do."""
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", "hdfs:///ckpt")
+    rs = RoundState(FakeSpark("spark://host:7077"), checkpoint_every=2)
+    for checkpoint in (
+        rs.truncate,
+        lambda df: rs.advance(df, rnd=2),
+        memo_checkpoint,
+    ):
+        df = FakeDF("spark://host:7077")
+        checkpoint(df)
+        assert df.sparkSession.sparkContext.getCheckpointDir() == "hdfs:///ckpt"
+    df = FakeDF("spark://host:7077")
+    rs.advance(df, rnd=1)  # persist only: no checkpoint, no dir
+    assert df.sparkSession.sparkContext.getCheckpointDir() is None
+    local = RoundState(FakeSpark("local[4]"), checkpoint_every=2)
+    df = FakeDF("local[4]")
+    local.advance(df, rnd=2)
+    local.truncate(df)
+    memo_checkpoint(df)
+    assert df.sparkSession.sparkContext.getCheckpointDir() is None

@@ -4,16 +4,22 @@ table registration (io/sources.py)."""
 from __future__ import annotations
 
 import datetime
+import os
+import sys
+import threading
+import types
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from mapreduce_sssp_spark.io import sources
 from mapreduce_sssp_spark.io.sources import (
     load_events,
     normalize_event_ts,
     register_tables,
 )
+from mapreduce_sssp_spark.runstate import RunCache
 
 SF = "/root/testdata/sf0.001"
 
@@ -91,3 +97,65 @@ def test_register_tables_drops_stale_view_on_failure(spark, tmp_path):
     with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND|region"):
         spark.sql("SELECT count(*) FROM region").collect()
     register_tables(spark, SF)
+
+
+def test_unstatable_table_is_read_fresh_not_memoized(spark, monkeypatch):
+    """A path os.stat cannot see (remote storage) has no mtime to
+    invalidate a memo entry by: every call reads fresh and the scan
+    memo does not grow."""
+
+    def no_stat(path):
+        raise OSError(f"cannot stat {path}")
+
+    monkeypatch.setattr(
+        sources, "os", types.SimpleNamespace(stat=no_stat, path=os.path)
+    )
+    before = len(sources._SCAN_MEMO._d)
+    a = sources.load_table(spark, SF, "nation")
+    b = sources.load_table(spark, SF, "nation")
+    assert a is not b
+    want = sorted(spark.read.parquet(f"{SF}/nation.parquet").collect())
+    assert sorted(a.collect()) == sorted(b.collect()) == want
+    assert len(want) == 25
+    assert len(sources._SCAN_MEMO._d) == before
+
+
+def test_run_cache_evicts_oldest_at_cap():
+    memo = RunCache(cap=2)
+    for key in ("a", "b", "c"):
+        memo.put(key, key.upper())
+    assert len(memo._d) == 2
+    assert memo.get("a") is None
+    assert (memo.get("b"), memo.get("c")) == ("B", "C")
+
+
+def test_run_cache_concurrent_puts_stay_bounded():
+    """Concurrent puts into a full memo: no eviction races (a lost
+    update raises KeyError in a thread) and the cap holds."""
+    memo = RunCache(cap=4)
+    errors: list[BaseException] = []
+
+    def worker(t: int) -> None:
+        try:
+            for i in range(2000):
+                memo.put((t, i), i)
+                memo.get((t, i - 1))
+        except BaseException as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=worker, args=(t,))
+            for t in range(2 * (os.cpu_count() or 4))
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(memo._d) <= 4
