@@ -114,13 +114,12 @@ def load_parallel(
             for f in df.inputFiles()
             if f.startswith("file:")
         ]
-        max_split = int(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-            .lower().removesuffix("b").removesuffix("m") or 134217728
+        # The conf is a JVM byte string ("134217728", "128m", "1g",
+        # "512k"); parse it the way Spark does (bare numbers are bytes).
+        java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        max_split = java_utils.byteStringAsBytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
         )
-        # conf may carry a unit suffix ("128m"); normalize to bytes.
-        if max_split < 1 << 20:
-            max_split <<= 20
         total = sum(os.path.getsize(f) for f in files)
         est_splits = max(len(files), total // max_split)
         if est_splits >= n:

@@ -159,3 +159,25 @@ def test_run_cache_concurrent_puts_stay_bounded():
     assert not any(t.is_alive() for t in threads)
     assert errors == []
     assert len(memo._d) <= 4
+
+
+@pytest.mark.parametrize(
+    "max_bytes, spread", [("1k", False), ("8192", False), ("128m", True)]
+)
+def test_load_parallel_reads_max_partition_bytes_as_spark_does(
+    spark, max_bytes, spread
+):
+    """spark.sql.files.maxPartitionBytes is a JVM byte string: "8192" is
+    bytes (not MiB) and "1k" is a legal unit. At either small setting
+    the 117 KB lineitem scan already spans at least n splits, so
+    load_parallel skips the round-robin spread; at 128 MiB it is one
+    split and gets spread."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, max_bytes)
+    try:
+        df = sources.load_parallel(spark, SF, "lineitem")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert ("RoundRobinPartitioning" in plan) == spread
+    finally:
+        spark.conf.set(key, old)

@@ -5,8 +5,12 @@ Usage: python tools/ab_probe.py <query>[,query2,...] [n_samples]
 Times each named query with the bench's own methodology — noop sink,
 memo clear + clearCache between samples, memo producers replayed
 untimed first so marginal-cost queries measure what the bench records —
-and prints min/median of N samples. For A/B runs, run this before and
-after an edit on a quiet host; samples alternate nothing (single
+and prints min/median of N samples beside the median count of py4j
+commands (Python->JVM round trips) a timed sample sent: the driver-layer
+number a plan-construction change moves. The count includes the deletes
+py4j sends when Python's collector frees JVM references, so it varies a
+little between samples. For A/B runs, run this before
+and after an edit on a quiet host; samples alternate nothing (single
 variant), so edit-compare-edit loops should keep the host load equal.
 """
 from __future__ import annotations
@@ -16,7 +20,30 @@ import statistics
 import sys
 import time
 
+import py4j.clientserver
+import py4j.java_gateway
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+_PY4J_COMMANDS = 0
+
+
+def _count_py4j_commands() -> None:
+    """Count every command the driver sends to the JVM, whichever py4j
+    connection class the gateway uses (pinned-thread mode or not)."""
+    for cls in (
+        py4j.clientserver.ClientServerConnection,
+        py4j.java_gateway.GatewayConnection,
+    ):
+        send = cls.send_command
+
+        def counting_send(self, command, _send=send):
+            global _PY4J_COMMANDS
+            _PY4J_COMMANDS += 1
+            return _send(self, command)
+
+        cls.send_command = counting_send
 
 
 def main() -> None:
@@ -50,7 +77,9 @@ def main() -> None:
             pass
     spark.catalog.clearCache()
 
+    _count_py4j_commands()
     results: dict[str, list[float]] = {n: [] for n in names}
+    commands: dict[str, list[int]] = {n: [] for n in names}
     for s in range(n_samples):
         for name in names:
             clear_convergence_memo()
@@ -65,17 +94,24 @@ def main() -> None:
                 ).save()
                 spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"ab:{name}#{s}")
+            sent = _PY4J_COMMANDS
             t0 = time.time()
             queries[name](spark, sf_dir).write.mode("overwrite").format(
                 "noop"
             ).save()
             dt = time.time() - t0
             results[name].append(dt)
-            print(f"[ab] {name} sample {s}: {dt:.3f}s", file=sys.stderr)
+            commands[name].append(_PY4J_COMMANDS - sent)
+            print(
+                f"[ab] {name} sample {s}: {dt:.3f}s"
+                f" py4j={commands[name][-1]}",
+                file=sys.stderr,
+            )
     for name in names:
         xs = results[name]
         print(
             f"{name}: min={min(xs):.3f} med={statistics.median(xs):.3f} "
+            f"py4j={int(statistics.median(commands[name]))} "
             f"samples={[round(x, 3) for x in xs]}"
         )
 
